@@ -453,7 +453,10 @@ private[cdc] final class ChangelogPartitionReader(p: ChangelogPartition,
     hadoopConfDelta: Seq[(String, String)])
   extends PartitionReader[InternalRow] {
 
-  private val conf = ParquetRowCodec.confFrom(hadoopConfDelta)
+  /** The JVM's shared conf for this payload ([[ParquetRowCodec.confFrom]]):
+    * one instance for every task under the same session conf, read-only.
+    */
+  private[cdc] val conf = ParquetRowCodec.confFrom(hadoopConfDelta)
 
   /** merge-on-read LAYERED side: ≥2 files with a delta among them means
     * urls can overlap across the layers — see the resolve notes below.

@@ -403,7 +403,7 @@ object Merge {
 
     // collect written files + row counts from parquet footers (no second
     // scan of the data)
-    val written = listWritten(commitDir, newSchemaId, delta = morMode)
+    val written = listWritten(spark, commitDir, newSchemaId, delta = morMode)
     tp = dbg(epoch, "footers", tp)
     val rowsApplied = written.map(_.rows).sum
 
@@ -642,11 +642,16 @@ object Merge {
   }
 
   /** Public for lake maintenance (compaction reuses the write layout). */
-  def listWrittenFiles(commitDir: String, schemaId: Int): Seq[DataFile] =
-    listWritten(commitDir, schemaId)
+  def listWrittenFiles(spark: SparkSession, commitDir: String,
+      schemaId: Int): Seq[DataFile] =
+    listWritten(spark, commitDir, schemaId)
 
-  private def listWritten(commitDir: String, schemaId: Int,
-      delta: Boolean = false): Seq[DataFile] = {
+  /** Footers are read with the session's own hadoopConfiguration: the
+    * driver already holds it, so no conf is built per file.
+    */
+  private def listWritten(spark: SparkSession, commitDir: String,
+      schemaId: Int, delta: Boolean = false): Seq[DataFile] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = Paths.get(commitDir)
     val BucketDir = "_bucket=(\\d+)".r
     val paths = graft.core.Fs.list(root).flatMap { sub =>
@@ -666,7 +671,7 @@ object Merge {
       val futs = paths.map { case (p, b) =>
         pool.submit(new java.util.concurrent.Callable[DataFile] {
           def call(): DataFile = {
-            val (rows, ts) = footerMeta(p)
+            val (rows, ts) = footerMeta(p, conf)
             DataFile(p.toString, b, rows, Files.size(p), schemaId,
               ts.map(_._1), ts.map(_._2), delta = delta)
           }
@@ -683,13 +688,15 @@ object Merge {
     * carry none — applyBatch pins the writer to TIMESTAMP_MICROS, see
     * there), so a partial-stats file is kept, never mis-pruned.
     */
-  private def footerMeta(p: Path): (Long, Option[(Long, Long)]) = {
-    import org.apache.hadoop.conf.Configuration
+  private def footerMeta(p: Path, conf: org.apache.hadoop.conf.Configuration)
+      : (Long, Option[(Long, Long)]) = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), new Configuration())
-    val r = ParquetFileReader.open(in)
+      new org.apache.hadoop.fs.Path(p.toUri), conf)
+    // open(in) alone builds its read options over a fresh default conf
+    val r = ParquetFileReader.open(in, HadoopReadOptions.builder(conf).build())
     try {
       val blocks = r.getFooter.getBlocks.asScala
       val ranges = blocks.map { b =>

@@ -1,11 +1,13 @@
 package graft.cdc
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.io.api.{
   Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
@@ -45,9 +47,8 @@ private[graft] object ParquetRowCodec {
     * (review r5, twice: a driver-relative delta was still wrong when
     * executor containers lack the driver's XMLs). Values are read
     * expanded via get(). This is Spark's own SerializableConfiguration
-    * pattern re-expressed without the private[spark] class; the factory
-    * holding it serializes once per stage (task binaries are broadcast),
-    * so the ~tens-of-KB payload is per-stage, not per-task.
+    * pattern re-expressed without the private[spark] class; executors
+    * turn it into a conf through [[confFrom]].
     */
   def hadoopConfDelta(spark: org.apache.spark.sql.SparkSession)
       : Seq[(String, String)] = {
@@ -56,15 +57,25 @@ private[graft] object ParquetRowCodec {
       .toSeq
   }
 
-  /** Executor side: the driver's effective conf, rebuilt. Entries are
-    * applied over a classpath default (quiet on executors that DO have
-    * the site XMLs — same values win).
+  /** Executor side: the driver's effective conf, built once per JVM and
+    * shared by every task for as long as the payload stays the same — a
+    * build parses the classpath default XMLs and sets ~1k keys, more work
+    * per task than decoding a bucket. Entries apply over a classpath
+    * default (quiet on executors that DO have the site XMLs — same values
+    * win). The cache holds the last payload and compares by content, so a
+    * session conf change reaches the next scan as a rebuild. Callers only
+    * read the shared instance: parquet's reader and writer builders never
+    * set a key in their conf (HadoopConfCacheSpec pins that).
     */
-  def confFrom(delta: Seq[(String, String)]): Configuration = {
-    val c = new Configuration()
-    delta.foreach { case (k, v) => c.set(k, v) }
-    c
+  def confFrom(delta: Seq[(String, String)]): Configuration = synchronized {
+    if (cached == null || cached._1 != delta) {
+      val c = new Configuration()
+      delta.foreach { case (k, v) => c.set(k, v) }
+      cached = (delta, c)
+    }
+    cached._2
   }
+  private var cached: (Seq[(String, String)], Configuration) = _
 
   // ---------- read side ----------
 
@@ -233,10 +244,22 @@ private[graft] object ParquetRowCodec {
     }
   }
 
+  /** Opens through an InputFile-based builder: the path-based
+    * `ParquetReader.builder` creates (and parses) a throwaway
+    * `new Configuration()` per file before `withConf` replaces it.
+    */
   def openReader(path: String, target: StructType,
       conf: Configuration): ParquetReader[Array[Any]] =
-    ParquetReader.builder(new RowReadSupport(target),
-      new org.apache.hadoop.fs.Path(path)).withConf(conf).build()
+    new RowReaderBuilder(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path), conf), conf, target).build()
+
+  private final class RowReaderBuilder(file: HadoopInputFile,
+      conf: Configuration, target: StructType)
+      extends ParquetReader.Builder[Array[Any]](file,
+        new HadoopParquetConfiguration(conf)) {
+    override protected def getReadSupport: ReadSupport[Array[Any]] =
+      new RowReadSupport(target)
+  }
 
   // ---------- write side (sink staging) ----------
 

@@ -158,7 +158,7 @@ object Maintenance {
         .sortWithinPartitions(col("_bucket"), col("warc_ts"))
         .write.partitionBy("_bucket").mode("overwrite").parquet(commitDir)
     }
-    val written = Merge.listWrittenFiles(commitDir, snap.schemaId)
+    val written = Merge.listWrittenFiles(spark, commitDir, snap.schemaId)
     // a tombstone purge invalidates changelogs that CROSS it: a delete
     // whose tombstone was purged emits nothing in changesBetween, so a
     // replica reading across the purge would silently keep the stale row.
@@ -197,7 +197,7 @@ object Maintenance {
         .sortWithinPartitions(col("_bucket"), col("warc_ts"))
         .write.partitionBy("_bucket").mode("overwrite").parquet(commitDir)
     }
-    val written = Merge.listWrittenFiles(commitDir, snap.schemaId)
+    val written = Merge.listWrittenFiles(spark, commitDir, snap.schemaId)
     commitRewriteOrCleanup(table, commitDir) {
       table.commitDelta(snap, snap.version + 1, snap.schemaId, dirty, written,
         LakeTable.inheritLineage(snap.summary) ++ Map(
@@ -257,7 +257,7 @@ object Maintenance {
         .sortWithinPartitions(col("_bucket"), col("warc_ts"))
         .write.partitionBy("_bucket").mode("overwrite").parquet(commitDir)
     }
-    val written = Merge.listWrittenFiles(commitDir, snap.schemaId)
+    val written = Merge.listWrittenFiles(spark, commitDir, snap.schemaId)
     commitRewriteOrCleanup(table, commitDir) {
       table.commitRewrite(snap, snap.schemaId, newBuckets, written,
         LakeTable.inheritLineage(snap.summary) ++ Map(

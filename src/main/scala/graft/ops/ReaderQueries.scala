@@ -197,7 +197,6 @@ object ReaderQueries {
       "s9_zip_extract",
       (s, dir) => {
         import s.implicits._
-        import scala.jdk.CollectionConverters._
         // staging root honors graft.scratch.dir (set it to a shared mount
         // under spark-submit so executor-side zip writes land where the
         // driver-side binaryFile scan below will look — round-2 verdict #7;
@@ -206,8 +205,7 @@ object ReaderQueries {
         // ship the session's Hadoop conf to the writing tasks so archive
         // staging honors spark.hadoop.* (defaultFS, credentials) — the
         // serialized kv form avoids any non-public conf wrapper
-        val hconf = s.sparkContext.hadoopConfiguration.iterator().asScala
-          .map(e => (e.getKey, e.getValue)).toSeq
+        val hconf = graft.cdc.ParquetRowCodec.hadoopConfDelta(s)
         tbl(s, dir, "supplier")
           .select(col("s_suppkey").cast("long").as("k"), col("s_name"),
             col("s_nationkey").cast("long").as("nk"))

@@ -51,14 +51,12 @@ object ZipArchive {
   def writeZip(path: String, members: Iterator[(String, Array[Byte])],
       hadoopConf: Seq[(String, String)] = Nil): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    // rebuild the SESSION's Hadoop conf from the serialized kv list: a
-    // bare `new Configuration()` ignores spark.hadoop.* settings
-    // (defaultFS override, object-store credentials) on executors, so
-    // the write would target the wrong FS while the driver-side scan
-    // reads via Spark's conf (round-2 review)
-    val conf = new org.apache.hadoop.conf.Configuration(hadoopConf.isEmpty)
-    hadoopConf.foreach { case (k, v) => conf.set(k, v) }
-    val fs = p.getFileSystem(conf)
+    // the SESSION's Hadoop conf from the serialized kv list (the JVM's
+    // shared instance for it): a bare `new Configuration()` ignores
+    // spark.hadoop.* settings (defaultFS override, object-store
+    // credentials) on executors, so the write would target the wrong FS
+    // while the driver-side scan reads via Spark's conf
+    val fs = p.getFileSystem(graft.cdc.ParquetRowCodec.confFrom(hadoopConf))
     val zout = new ZipOutputStream(
       new BufferedOutputStream(fs.create(p, true)))
     try {
