@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.core.{SchemaRegistry, Schemas}
-import graft.lake.{DataFile, LakeTable, Snapshot}
+import graft.lake.{CommitConflict, DataFile, LakeTable, Snapshot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
@@ -82,8 +82,7 @@ object Merge {
   /** Table-independent key pass for a batch: per-url argmax + lineage
     * pre-aggregates over (url, warc_ts, lsn, op) only. Because it never
     * reads the table, a driver can compute it for batch k+1 WHILE batch k
-    * is still writing (pipelined micro-batches — see CdcStream): persist
-    * the result and pass it to applyBatch as `preparedKeys`.
+    * is still writing (pipelined micro-batches — see [[Prefetch]]).
     */
   def prepareKeys(rawBatch: DataFrame): DataFrame =
     rawBatch
@@ -144,15 +143,13 @@ object Merge {
   def applyBatch(spark: SparkSession, table: LakeTable, rawBatch: DataFrame,
       epoch: Long, batchSchemaVersion: Int,
       batchBytesHint: Option[Long] = None,
-      preparedKeys: Option[DataFrame] = None,
-      preparedWinners: Option[DataFrame] = None,
+      prepared: Option[Prepared] = None,
       quarantineDir: Option[String] = None,
       partitionLineage: Boolean = false,
       gateKey: String = "last-epoch",
       truncate: Boolean = false): MergeStats = {
-    def unprepare(): Unit = {
-      preparedKeys.foreach(_.unpersist())
-      preparedWinners.foreach(_.unpersist())
+    def unprepare(): Unit = prepared.foreach { p =>
+      p.keys.unpersist(); p.winners.unpersist()
     }
     val t0 = System.nanoTime()
     var tp = t0
@@ -186,7 +183,7 @@ object Merge {
     // aggregated per url with map-side partial combine, so a hot url with
     // 10^6 duplicates pre-combines per task (skew-immune, no salting
     // needed). Shuffled bytes: O(distinct urls × 32B), not O(batch payload).
-    val perKeyPlan = preparedKeys.getOrElse(prepareKeys(aligned))
+    val perKeyPlan = prepared.map(_.keys).getOrElse(prepareKeys(aligned))
     // T6 late-data lineage (reference analog: SUBMITTED_LATE flag,
     // late_round12/upload_submissions.R:37): winners older than the
     // table's event-time watermark are accepted (upsert is late-tolerant)
@@ -251,7 +248,7 @@ object Merge {
       // persist: the async stats job and the winner-broadcast build both
       // read this subplan — without the cache the narrow scan runs twice
       // (and thrice with the next batch's prepare-ahead competing)
-      if (preparedKeys.isEmpty) perKeyPlan.persist()
+      if (prepared.isEmpty) perKeyPlan.persist()
       val f = Future { statsOf(perKeyPlan).head() }
       val allBuckets = (0 until nb).toSet
       // truncate: current rows are dropped, not resolved against —
@@ -305,10 +302,10 @@ object Merge {
     // winner join sizes itself from the real count.
     val syncKeys: Option[Long] =
       if (statsWall) Some(Await.result(stats, Duration.Zero).getAs[Long]("nKeys"))
-      else if (truncate && preparedWinners.isEmpty)
+      else if (truncate && prepared.isEmpty)
         Option(Await.result(stats, Duration.Inf).getAs[Long]("nKeys"))
       else None
-    val winnersRaw = preparedWinners.getOrElse(
+    val winnersRaw = prepared.map(_.winners).getOrElse(
       prepareWinners(rawBatch, perKeyPlan, syncKeys))
     val joined = alignBatch(winnersRaw, dataSchema)
     // T4 quarantine / dead-letter (reference analog: problem_submissions,
@@ -546,7 +543,7 @@ object Merge {
       // a LOST RACE (vs an IO failure mid-publish) definitely never
       // published — delete this attempt's phase-1 data eagerly so a
       // retrying caller doesn't accrete one orphaned bucket set per loss
-      if (String.valueOf(e.getMessage).contains("concurrent commit lost"))
+      if (e.isInstanceOf[CommitConflict])
         graft.core.Fs.deleteRecursively(Paths.get(commitDir))
       throw e
     }
@@ -561,7 +558,7 @@ object Merge {
       }
     }
     perKeyPlan.unpersist() // no-op unless persisted (prune path / prepared)
-    preparedWinners.foreach(_.unpersist())
+    prepared.foreach(_.winners.unpersist())
     tp = dbg(epoch, "commit", tp)
 
     MergeStats(epoch, applied = true, eventsIn, rowsApplied, conflicts,
@@ -589,8 +586,7 @@ object Merge {
   def applyBatchRetrying(spark: SparkSession, table: LakeTable,
       rawBatch: DataFrame, epoch: Long, batchSchemaVersion: Int,
       batchBytesHint: Option[Long] = None,
-      preparedKeys: Option[DataFrame] = None,
-      preparedWinners: Option[DataFrame] = None,
+      prepared: Option[Prepared] = None,
       quarantineDir: Option[String] = None,
       partitionLineage: Boolean = false,
       gateKey: String = "last-epoch",
@@ -600,12 +596,10 @@ object Merge {
     while (true) {
       try return applyBatch(spark, table, rawBatch, epoch,
         batchSchemaVersion, batchBytesHint,
-        if (lost == 0) preparedKeys else None,
-        if (lost == 0) preparedWinners else None,
+        if (lost == 0) prepared else None,
         quarantineDir, partitionLineage, gateKey, truncate)
       catch {
-        case e: IllegalStateException
-            if String.valueOf(e.getMessage).contains("concurrent commit lost") =>
+        case e: CommitConflict =>
           lost += 1
           commitRacesLost.incrementAndGet()
           if (lost >= attempts) throw new IllegalStateException(
@@ -618,6 +612,14 @@ object Merge {
 
   /** Total merge commit races lost (and retried) in this JVM. */
   val commitRacesLost = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** [[Prefetch]] outcomes in this JVM: batches handed to the merge,
+    * batches released unused (a mispredicted tail batch, an aborted loop,
+    * a failed prefetch), and background preparations that failed.
+    */
+  val prefetchHits = new java.util.concurrent.atomic.AtomicLong(0)
+  val prefetchMisses = new java.util.concurrent.atomic.AtomicLong(0)
+  val prefetchFailures = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Align a producer-versioned batch to the (evolved) registry schema:
     * missing columns null-backfilled, narrow types widened — BigQuery

@@ -1,7 +1,7 @@
 package graft.cdc
 
 import graft.core.SchemaRegistry
-import graft.lake.LakeTable
+import graft.lake.{CommitConflict, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -64,15 +64,9 @@ object CdcStream {
       checkpointDir: String): Unit = {
     val gk = gateKeyFor(checkpointDir)
     val snap = table.currentSnapshot
-    val commits = Paths.get(checkpointDir, "commits")
-    val maxCommitted: Option[Long] =
-      if (!Files.isDirectory(commits)) None
-      else graft.core.Fs.list(commits)
-        .flatMap(_.getFileName.toString.toLongOption)
-        .maxOption
     if (snap.summary.get(gk).isEmpty)
       for {
-        b <- maxCommitted // fresh checkpoints (no batches) never seed
+        b <- lastCommittedBatch(checkpointDir) // fresh checkpoints never seed
         legacy <- snap.summary.get(StreamGateKey).map(_.toLong)
         // SOUNDNESS GUARD (round-4 review): seed only when the legacy
         // high-water is consistent with THIS checkpoint's own history —
@@ -88,7 +82,7 @@ object CdcStream {
         if legacy <= b + 1
       } {
         try table.updateProperties(Map(gk -> legacy.toString))
-        catch { case e: IllegalStateException =>
+        catch { case e: CommitConflict =>
           // lost a commit race: the seed is a best-effort lineage
           // dedup — without it the replayed batch double-logs lineage
           // (the documented pre-upgrade window), never corrupts state
@@ -97,6 +91,15 @@ object CdcStream {
             "may double-log lineage once")
         }
       }
+  }
+
+  /** The last batchId a checkpoint committed (`commits/<id>`), if any. */
+  private def lastCommittedBatch(checkpointDir: String): Option[Long] = {
+    val commits = Paths.get(checkpointDir, "commits")
+    if (!Files.isDirectory(commits)) None
+    else graft.core.Fs.list(commits)
+      .flatMap(_.getFileName.toString.toLongOption)
+      .maxOption
   }
 
   /** Structured Streaming tail of a uniform-schema log directory. Besides
@@ -129,39 +132,30 @@ object CdcStream {
       .option("latestFirst", "false")
       .parquet(logDir)
 
-    // ---- speculative next-batch prefetch (round-6, r5 verdict #3) ----
-    // The replay driver overlaps batch k+1's table-independent passes
-    // (narrow key argmax + full-payload winners scan — the dominant
-    // per-batch cost) with batch k's resolve+write; the streaming tail
-    // could not, because Spark owns batching — measured at 8 cores the
-    // tail ran ~1.0M events/s vs replay's ~1.7M on the same log, with
-    // ~97% of tail wall inside applyBatch (the fixed per-trigger cost is
-    // NOT the gap; the un-overlapped winners scan is). But the next
-    // trigger's file set is PREDICTABLE: the file source takes the
-    // oldest `maxFilesPerTrigger` not-yet-processed files (latestFirst =
-    // false). So after each batch we list the log, predict the next file
-    // set, and prepare keys+winners in the background — exactly the
-    // replay pipeline. SAFETY: the prepared plans are handed to the
-    // merge ONLY when the actual batch's `inputFiles` equals the
-    // predicted set exactly; a mispredicted prefetch (files landing out
-    // of modification-time order, a rival consumer) is discarded, never
-    // applied. A wrong prediction costs one wasted background scan; it
-    // can never change what the merge computes.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // ---- speculative next-batch prefetch ----
+    // Spark owns batching here, but the next trigger's file set is
+    // PREDICTABLE: the file source takes the oldest `maxFilesPerTrigger`
+    // not-yet-processed files (latestFirst = false). So after each batch
+    // we list the log, predict the next file set and prepare it (see
+    // [[Prefetch]]) — the replay pipeline. SAFETY: the prepared plans are
+    // handed to the merge ONLY when the actual batch's file set equals
+    // the predicted set exactly; a mispredicted prefetch (files landing
+    // out of modification-time order, a rival consumer) is released,
+    // never applied. A wrong prediction costs one wasted background scan;
+    // it can never change what the merge computes.
     val hconf = spark.sparkContext.hadoopConfiguration
+    val logFs = new org.apache.hadoop.fs.Path(logDir).getFileSystem(hconf)
     def norm(p: String): String =
       new org.apache.hadoop.fs.Path(p).toUri.getPath
-    def listLogFiles(): Seq[(String, Long)] = { // (path, modTime)
-      val pat = new org.apache.hadoop.fs.Path(logDir)
-      val fs = pat.getFileSystem(hconf)
-      val roots = Option(fs.globStatus(pat)).map(_.toSeq).getOrElse(Nil)
+    def listLogFiles(): Seq[org.apache.hadoop.fs.FileStatus] = {
+      val roots = Option(logFs.globStatus(new org.apache.hadoop.fs.Path(logDir)))
+        .map(_.toSeq).getOrElse(Nil)
       roots.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st)
+        if (st.isDirectory) logFs.listStatus(st.getPath).toSeq else Seq(st)
       }.filter { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith(".") && !n.startsWith("_")
-      }.map(st => (st.getPath.toString, st.getModificationTime))
+      }
     }
     // the actual file set of a delivered batch comes from the file
     // source's own metadata log under the checkpoint (sources/0/<id>,
@@ -172,11 +166,11 @@ object CdcStream {
     // from. Unreadable/format-drifted log ⇒ empty set ⇒ the prediction
     // never matches and prefetch silently disables — never misapplies.
     val srcLogDir = new org.apache.hadoop.fs.Path(checkpointDir, "sources/0")
+    val srcFs = srcLogDir.getFileSystem(hconf)
     val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def logEntries(p: org.apache.hadoop.fs.Path): Seq[(String, Long)] = {
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) return Nil
-      val in = fs.open(p)
+      if (!srcFs.exists(p)) return Nil
+      val in = srcFs.open(p)
       val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       txt.linesIterator
         .filter(l => l.nonEmpty && l.charAt(0) == '{').flatMap { l =>
@@ -187,109 +181,61 @@ object CdcStream {
         }.toSeq
     }
     def filesOfBatch(batchId: Long): Set[String] = {
-      val fs = srcLogDir.getFileSystem(hconf)
       val plain = new org.apache.hadoop.fs.Path(srcLogDir, batchId.toString)
-      val p = if (fs.exists(plain)) plain
+      val p = if (srcFs.exists(plain)) plain
         else new org.apache.hadoop.fs.Path(srcLogDir, s"$batchId.compact")
       logEntries(p).filter(_._2 == batchId).map(e => norm(e._1)).toSet
     }
+    // files already processed: on a RESUMED checkpoint, those of every
+    // committed batch — recovered before the first prediction, so a
+    // restart predicts its first batch like any other
     val seen = scala.collection.mutable.HashSet[String]()
-    var seenInit = false
-    var predicted: Option[(Set[String], Future[_], (DataFrame, DataFrame))] =
-      None
-    var lastObs: Option[(Long, Long)] = None // (keys, bytes) of last applied
-    def dropPrediction(): Unit = {
-      predicted.foreach { case (_, _, (pk, win)) =>
-        pk.unpersist(); win.unpersist()
+    lastCommittedBatch(checkpointDir).foreach { last =>
+      if (srcFs.exists(srcLogDir)) srcFs.listStatus(srcLogDir).foreach { st =>
+        logEntries(st.getPath).filter(_._2 <= last)
+          .foreach(e => seen += norm(e._1))
       }
-      predicted = None
     }
+    val ahead = new Prefetch[Set[String]]()
     def prefetchNext(): Unit = {
       // the source's order: oldest modification time first, path as the
-      // deterministic tiebreak. The equality gate above makes a mismatch
-      // with Spark's exact internal ordering harmless.
-      val next = listLogFiles().filterNot(f => seen.contains(norm(f._1)))
-        .sortBy { case (p, t) => (t, p) }
+      // deterministic tiebreak. The equality gate makes a mismatch with
+      // Spark's exact internal ordering harmless.
+      val next = listLogFiles()
+        .filterNot(st => seen.contains(norm(st.getPath.toString)))
+        .sortBy(st => (st.getModificationTime, st.getPath.toString))
         .take(maxFilesPerTrigger)
-      if (next.isEmpty) return
-      val paths = next.map(_._1)
-      val nextBatch = spark.read.schema(eventSchema).parquet(paths: _*)
-      val pk = Merge.prepareKeys(nextBatch).persist()
-      val bytes = {
-        val fs = new org.apache.hadoop.fs.Path(paths.head).getFileSystem(hconf)
-        paths.map(p => fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(p)).getLen).sum
-      }
-      val keyEstimate = lastObs.collect { case (k, b) if b > 0 =>
-        math.ceil(k.toDouble * bytes / b).toLong
-      }
-      val win = Merge.prepareWinners(nextBatch, pk, keyEstimate).persist()
-      val fut = Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "prefetch")
-        try { pk.count(); win.count() }
-        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      }
-      fut.failed.foreach { e =>
-        System.err.println("[graft] tail prefetch failed " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — next batch " +
-          "will recompute on the critical path")
-        pk.unpersist(); win.unpersist()
-      }
-      predicted = Some((paths.map(norm).toSet, fut, (pk, win)))
+      val paths = next.map(_.getPath.toString)
+      // the estimator's unit: file bytes, here and for the applied batch
+      if (paths.nonEmpty)
+        ahead.prepare(paths.map(norm).toSet,
+          spark.read.schema(eventSchema).parquet(paths: _*), next.map(_.getLen).sum)
     }
 
     // progress listener registered BEFORE start and bound by query name in
     // onQueryStarted (delivered synchronously with start()): registering
     // after start raced a fast first AvailableNow micro-batch, silently
     // dropping its progress line (round-2 advice)
-    // prefetch batch 0 BEFORE the stream starts (round-6): the first
+    // prefetch the first batch BEFORE the stream starts: the first
     // trigger otherwise pays the un-overlapped key+winners scans ON TOP
     // of Spark's stream-start planning (measured: first tail batch ~3x
-    // steady state). On a fresh checkpoint the oldest-files prediction
-    // is exactly batch 0's file set; on a RESUMED checkpoint `seen` is
-    // still empty here (it recovers inside the first foreachBatch), so
-    // the prediction is wrong and the exact file-set handover gate
-    // discards it — one wasted background scan, never a misapply.
+    // steady state)
     prefetchNext()
     val queryName = s"graft-tail-${java.util.UUID.randomUUID().toString.take(8)}"
     val remove = attachProgressSink(spark, queryName, tableDir,
       // a prediction left over when the query ends (stop mid-drain, a
       // ProcessingTime follower shut down) must release its cached blocks
-      onTerminated = () => dropPrediction())
+      onTerminated = () => ahead.close())
     try {
       events.writeStream
         .queryName(queryName)
         .option("checkpointLocation", checkpointDir)
         .trigger(trigger)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!seenInit) { // resumed checkpoint: recover processed files
-            seenInit = true
-            val fs = srcLogDir.getFileSystem(hconf)
-            if (fs.exists(srcLogDir)) fs.listStatus(srcLogDir).foreach { st =>
-              logEntries(st.getPath).filter(_._2 < batchId)
-                .foreach(e => seen += norm(e._1))
-            }
-          }
           val files = filesOfBatch(batchId)
-          // hand the prepared plans over ONLY on an exact file-set match
-          // (and never from a prefetch that already failed — applyBatch
-          // would skip its own persist and re-run the scans per consumer)
-          val pk = predicted.collect {
-            case (pf, f, pair) if pf == files && !f.value.exists(_.isFailure) =>
-              pair
-          }
-          if (pk.isEmpty && predicted.nonEmpty) {
-            System.err.println(s"[graft] tail prefetch mispredicted batch " +
-              s"$batchId's file set — discarding (correctness unaffected)")
-            if (sys.env.contains("GRAFT_TAIL_DEBUG")) predicted.foreach {
-              case (pf, _, _) =>
-                System.err.println(s"[graft]   predicted-only: " +
-                  s"${(pf -- files).take(3)}\n[graft]   actual-only: " +
-                  s"${(files -- pf).take(3)} (pred=${pf.size} act=${files.size})")
-            }
-          }
-          if (pk.isEmpty) dropPrediction() // mispredicted: release, recompute
-          predicted = None // consumed either way; applyBatch unpersists
+          val bytes = files.iterator.map(p =>
+            logFs.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen).sum
+          val prepared = ahead.take(files) // the exact file-set gate
           // launch batch k+1's prefetch BEFORE applying batch k — the
           // replay pipeline's shape: the background scans (FAIR pool)
           // overlap this batch's resolve+write, not the next batch's own
@@ -304,7 +250,7 @@ object CdcStream {
           val stats = Merge.applyBatchRetrying(batch.sparkSession, table, batch,
             epoch = batchId, batchSchemaVersion = schemaVersion,
             batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk.map(_._1), preparedWinners = pk.map(_._2),
+            prepared = prepared,
             quarantineDir = quarantineDir,
             // production tail emits the north star's per-partition lineage
             partitionLineage = true,
@@ -312,14 +258,13 @@ object CdcStream {
             // namespace so an interleaved SQL/CLI merge — or a replay, or
             // a tail on a different checkpoint — cannot swallow a batch
             gateKey = gateKeyFor(checkpointDir))
-          if (stats.applied) Metrics.append(tableDir, stats)
-          if (stats.applied)
-            lastObs = Some((stats.eventsIn - stats.conflicts,
-              math.max(1L, hint.min(BigInt(Long.MaxValue)).toLong)))
-          ()
+          if (stats.applied) {
+            Metrics.append(tableDir, stats)
+            ahead.observe(stats, bytes)
+          }
         }
         .start()
-    } catch { case e: Throwable => remove(); dropPrediction(); throw e }
+    } catch { case e: Throwable => remove(); ahead.close(); throw e }
   }
 
   /** Pipe the named query's StreamingQueryProgress lines to the table's
@@ -392,76 +337,20 @@ object CdcStream {
         }
       }.toSeq.sortBy(_._1).take(maxChunks)
       .filter(_._1 > committed)
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
     def readChunk(v: Int, path: String) =
       // explicit per-version schema: no per-batch footer inference on the
       // driver (a serial cost on every micro-batch)
       spark.read.schema(chunkSchema(v)).parquet(path)
-    // pipelined micro-batches: batch k+1's table-independent passes — the
-    // narrow key argmax AND the full-payload winners scan (the dominant
-    // per-batch cost) — run in the background while batch k resolves and
-    // writes, without breaking the sequential snapshot chain. They run in
-    // a separate FAIR pool (when spark.scheduler.mode=FAIR) so the big
-    // prefetch scan cannot starve batch k's critical-path tasks.
-    //
-    // The winners join sizes itself from the most recently APPLIED
-    // batch's observed key count (eventsIn - conflicts from its
-    // MergeStats), SCALED by the byte-size ratio of the upcoming chunk to
-    // that batch's chunk — so a sudden much-larger chunk degrades to the
-    // shuffled join instead of blowing the broadcast, closing the
-    // staleness gap of a raw lagged count (round-4 review #2). The
-    // estimator costs NO barrier — an A/B measured building the winners
-    // plan behind the key-plan count (an Await at the consume site) at
-    // -11% total-wall at 32 cores, because batch k+1 then could not
-    // start until the whole prefetch completed instead of overlapping
-    // with it. Chunks 0 (unprepared) and 1 (no observation yet) keep the
-    // broadcast default — the same cold-bootstrap contract as the
-    // unprepared full-rewrite path, bounded by chunk sizing.
-    var prepared: Option[(Future[_], (DataFrame, DataFrame))] = None
-    var lastObs: Option[(Long, Long)] = None // (keys, chunkBytes) of last applied
-    chunks.zipWithIndex.map { case ((i, v, path), idx) =>
-      val batch = readChunk(v, path)
-      // a prefetch that has ALREADY failed must not hand over its
-      // (unpersisted) plans — applyBatch would then skip its own
-      // persist() and re-run the narrow key scan once per consumer
-      // (round-4 review #4). An in-flight prefetch hands over normally:
-      // persist() dedups the concurrent materialization, and a late
-      // failure's unpersist only costs recompute.
-      val pk = prepared.collect {
-        case (f, pair) if !f.value.exists(_.isFailure) => pair
-      }
-      prepared = chunks.lift(idx + 1).map { case (_, nv, np) =>
-        val nextBatch = readChunk(nv, np)
-        val nextPk = Merge.prepareKeys(nextBatch).persist()
-        val keyEstimate = lastObs.collect { case (k, b) if b > 0 =>
-          math.ceil(k.toDouble * pathBytes(np) / b).toLong
-        }
-        val nextWin = Merge.prepareWinners(nextBatch, nextPk, keyEstimate).persist()
-        val fut = Future { // materialize both caches in the background
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", "prefetch")
-          try { nextPk.count(); nextWin.count() }
-          finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-        }
-        // a swallowed prefetch failure would silently degrade to
-        // unpipelined execution (or resurface confusingly on the critical
-        // path) — surface it, and drop the caches so the critical-path
-        // recompute starts clean (round-1 advice)
-        fut.failed.foreach { e =>
-          System.err.println(
-            s"[graft] prefetch for chunk ${i + 1} failed (${e.getClass.getSimpleName}: " +
-              s"${e.getMessage}) — batch will recompute on the critical path")
-          nextPk.unpersist(); nextWin.unpersist()
-        }
-        (fut, (nextPk, nextWin))
-      }
-      val stats = Merge.applyBatchRetrying(spark, table, batch, epoch = i.toLong,
-        batchSchemaVersion = v, batchBytesHint = Some(pathBytes(path)),
-        preparedKeys = pk.map(_._1), preparedWinners = pk.map(_._2),
+    // pipelined micro-batches: chunk k+1's keys and winners are prepared
+    // in the background while chunk k resolves and writes (see
+    // [[Prefetch]]), sized by the lagged key-per-chunk-byte estimate
+    Prefetch.pipelined[(Int, Int, String)](chunks, c => pathBytes(c._3),
+        c => readChunk(c._2, c._3)) { case ((i, v, path), prepared) =>
+      val stats = Merge.applyBatchRetrying(spark, table, readChunk(v, path),
+        epoch = i.toLong, batchSchemaVersion = v,
+        batchBytesHint = Some(pathBytes(path)), prepared = prepared,
         gateKey = StreamGateKey)
       if (stats.applied) Metrics.append(tableDir, stats)
-      if (stats.applied)
-        lastObs = Some((stats.eventsIn - stats.conflicts, pathBytes(path)))
       stats
     }
   }

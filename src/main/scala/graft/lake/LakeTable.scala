@@ -45,6 +45,14 @@ final case class ManifestRef(
 final case class BucketChangeTask(bucket: Int, after: Seq[DataFile],
     before: Seq[DataFile])
 
+/** The loser of a snapshot-version race: another committer published the
+  * version this commit was built for (link(2) failed with EEXIST). Nothing
+  * was published, so the commit can be re-derived from the new head and
+  * retried.
+  */
+final class CommitConflict(message: String, cause: Throwable)
+    extends IllegalStateException(message, cause)
+
 /** One committed table version. `summary` carries the exactly-once /
   * lineage properties (batch epoch, source LSN range, rows applied,
   * conflict count — the reference's WRITE_APPEND + staged `gsutil`+`bq
@@ -622,7 +630,7 @@ final class LakeTable private (val dir: String, spark: SparkSession) {
       Files.deleteIfExists(tmp)
     } catch { case e: java.nio.file.FileAlreadyExistsException =>
       Files.deleteIfExists(tmp)
-      throw new IllegalStateException(
+      throw new CommitConflict(
         s"concurrent commit lost: v${next.version} already exists", e)
     }
     next
@@ -695,8 +703,7 @@ final class LakeTable private (val dir: String, spark: SparkSession) {
     while (true) {
       try return commitDelta(base, base.version + 1, schemaId,
         touchedBuckets, newFiles, summaryFor(base))
-      catch { case e: IllegalStateException
-          if String.valueOf(e.getMessage).contains("concurrent commit lost") =>
+      catch { case e: CommitConflict =>
         val head = currentSnapshot
         val ok = rebases < maxRebases &&
           head.version > base.version &&
@@ -746,8 +753,7 @@ final class LakeTable private (val dir: String, spark: SparkSession) {
       try return commitDelta(base, base.version + 1,
         math.max(schemaId, base.schemaId), touchedBuckets,
         base.filesForBuckets(touchedBuckets) ++ newFiles, summaryFor(base))
-      catch { case e: IllegalStateException
-          if String.valueOf(e.getMessage).contains("concurrent commit lost") =>
+      catch { case e: CommitConflict =>
         val head = currentSnapshot
         val ok = lost < maxRetries &&
           head.version > base.version &&

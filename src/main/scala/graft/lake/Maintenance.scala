@@ -21,7 +21,7 @@ object Maintenance {
 
   /** Bounded optimistic retry for maintenance commits racing a merge
     * (round-4 verdict #7): the loser of the snapshot-version race gets
-    * `concurrent commit lost` from [[LakeTable.commit]]; a maintenance
+    * a [[CommitConflict]] from [[LakeTable.commit]]; a maintenance
     * rewrite must then RE-RUN from the advanced snapshot — its written
     * output reflects the old content and publishing it as-is would drop
     * the winner's rows. Both sides retry: the merge path is
@@ -40,8 +40,7 @@ object Maintenance {
     while (true) {
       try return once
       catch {
-        case e: IllegalStateException
-            if String.valueOf(e.getMessage).contains("concurrent commit lost") =>
+        case e: CommitConflict =>
           lost += 1
           racesLost.incrementAndGet()
           if (lost >= attempts) throw new IllegalStateException(
@@ -61,7 +60,7 @@ object Maintenance {
       publish: => Snapshot): Snapshot =
     try publish
     catch { case e: Throwable =>
-      if (String.valueOf(e.getMessage).contains("concurrent commit lost"))
+      if (e.isInstanceOf[CommitConflict])
         graft.core.Fs.deleteRecursively(Paths.get(commitDir))
       throw e
     }

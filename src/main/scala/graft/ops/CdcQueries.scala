@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.cdc.Merge
+import graft.cdc.{Merge, Prefetch}
 import graft.lake.LakeTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,38 +47,32 @@ object CdcQueries {
 
   private def freshMergeEventsDir: String = fresh(mergeEventsDir)
 
-  /** Pipelined table-independent prep — the replay/tail drivers' shape
-    * (guide §2.6, overlap independent jobs): the per-epoch key argmax and
-    * winners semi-join never read the table, so kick off their
-    * materialization for EVERY epoch up front and let epoch k+1's narrow
-    * scans overlap epoch k's resolve+write instead of serializing behind
-    * it. Handover follows the replay contract exactly: an in-flight
-    * prefetch hands over normally (persist() dedups the concurrent
-    * materialization); one that already FAILED is dropped so applyBatch
-    * recomputes on the critical path. applyBatch unpersists handed-over
-    * plans itself; semantics are unchanged (preparedKeys/preparedWinners
-    * are the same inputs the streaming drivers pass).
+  /** Catalyst's size estimate of a batch: the merge's prune vs
+    * full-rewrite hint and the prefetch estimator's unit.
     */
-  private def prepareAhead(batches: Seq[DataFrame])
-      : Seq[(DataFrame, DataFrame, scala.concurrent.Future[_])] = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    batches.map { b =>
-      val pk = Merge.prepareKeys(b).persist()
-      val win = Merge.prepareWinners(b, pk).persist()
-      val fut = Future { pk.count(); win.count() }
-      fut.failed.foreach { _ => pk.unpersist(); win.unpersist() }
-      (pk, win, fut)
-    }
-  }
+  private def sizeOf(batch: DataFrame): Long =
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(BigInt(Long.MaxValue)).toLong
 
-  /** Prepared-plan pair for applyBatch, or (None, None) if its prefetch
-    * already failed (the replay drivers' gate).
+  /** The lifecycle queries' epoch loop: merge `batches` at epochs 0, 1, …
+    * with epoch k+1's keys and winners prepared while epoch k resolves and
+    * writes ([[Prefetch.pipelined]]). `hinted` passes each batch's size
+    * so a table-sized batch takes the full-rewrite path and runs its
+    * lineage stats async; without it the prune path runs (the MoR
+    * queries need it). `after(k)` runs once epoch k has committed.
     */
-  private def handover(p: (DataFrame, DataFrame, scala.concurrent.Future[_]))
-      : (Option[DataFrame], Option[DataFrame]) =
-    if (p._3.value.exists(_.isFailure)) (None, None)
-    else (Some(p._1), Some(p._2))
+  private[graft] def mergeEpochs(s: SparkSession, t: LakeTable,
+      batches: Seq[DataFrame], hinted: Boolean,
+      after: Int => Unit = _ => ()): Unit =
+    Prefetch.pipelined[(DataFrame, Int)](batches.zipWithIndex,
+        b => sizeOf(b._1), _._1) { case ((batch, epoch), prepared) =>
+      val stats = Merge.applyBatch(s, t, batch, epoch.toLong,
+        batchSchemaVersion = 3,
+        batchBytesHint = if (hinted) Some(sizeOf(batch)) else None,
+        prepared = prepared)
+      after(epoch)
+      stats
+    }
 
   private def asChangeLog(s: SparkSession, dir: String): DataFrame =
     tbl(s, dir, "events").select(
@@ -111,23 +105,11 @@ object CdcQueries {
           log.filter(col("lsn") <= cut1),
           log.filter(col("lsn") > cut1 && col("lsn") <= cut2),
           log.filter(col("lsn") > cut2))
-        // round-6: every epoch's keys+winners materialize in the
-        // background up front, so epoch k+1's narrow scans overlap epoch
-        // k's resolve+write (the replay driver's pipeline, applied to the
-        // lifecycle query itself)
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          // Catalyst's size estimate (same policy as CdcStream.tail): each
-          // third-of-the-log batch is table-sized, so the merge takes the
-          // full-rewrite path and runs its lineage stats ASYNC instead of
-          // paying the prune path's blocking stats barrier (~1 s/batch
-          // here)
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk, preparedWinners = win)
-        }
+        // hinted: each third-of-the-log batch is table-sized, so the
+        // merge takes the full-rewrite path and runs its lineage stats
+        // ASYNC instead of paying the prune path's blocking stats barrier
+        // (~1 s/batch here)
+        mergeEpochs(s, t, batches, hinted = true)
         log.unpersist()
         t.readUser().select(
           col("url").as("user_key"),
@@ -158,9 +140,8 @@ object CdcQueries {
         val log = asChangeLog(s, dir)
         val t = LakeTable.create(s, fresh(rowLevelDir), schemaId = 3,
           numBuckets = 8)
-        val hint = log.queryExecution.optimizedPlan.stats.sizeInBytes
         Merge.applyBatch(s, t, log, 0L, batchSchemaVersion = 3,
-          batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong))
+          batchBytesHint = Some(sizeOf(log)))
         // DELETE FROM t WHERE lang = 'click'
         graft.sql.GraftWrites.applyAndLog(s, t,
           e => graft.sql.GraftWrites.toEvents(t,
@@ -214,22 +195,24 @@ object CdcQueries {
         val t = LakeTable.create(s, fresh(rebaseDir), schemaId = 3,
           numBuckets = 8)
         val rebases0 = LakeTable.commitRebases.get()
-        // both racers' table-independent plans prepared concurrently up
-        // front (the rival's scans overlap the resident's whole pre-commit
-        // phase; semantics unchanged — see prepareAhead)
-        val prep = prepareAhead(Seq(outer, rival))
+        // both racers prepared up front, so the rival's scans overlap the
+        // resident's pre-commit phase: the one look-ahead of 2
+        val ahead = new Prefetch[Int](lookAhead = 2)
         val noop: () => Unit = () => ()
-        Merge.beforeCommitHook = () => {
-          Merge.beforeCommitHook = noop // the rival must not re-fire it
-          val (pk, win) = handover(prep(1))
-          Merge.applyBatch(s, t, rival, 1L, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        }
         try {
-          val (pk, win) = handover(prep(0))
+          ahead.prepare(0, outer, sizeOf(outer))
+          ahead.prepare(1, rival, sizeOf(rival))
+          Merge.beforeCommitHook = () => {
+            Merge.beforeCommitHook = noop // the rival must not re-fire it
+            Merge.applyBatch(s, t, rival, 1L, batchSchemaVersion = 3,
+              prepared = ahead.take(1))
+          }
           Merge.applyBatch(s, t, outer, 2L, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        } finally Merge.beforeCommitHook = noop
+            prepared = ahead.take(0))
+        } finally {
+          Merge.beforeCommitHook = noop
+          ahead.close()
+        }
         log.unpersist()
         require(LakeTable.commitRebases.get() > rebases0,
           "cdc_rebase_race: the disjoint race was not salvaged by rebase")
@@ -270,15 +253,8 @@ object CdcQueries {
           log.filter(col("lsn") <= cut1),
           log.filter(col("lsn") > cut1 && col("lsn") <= cut2),
           log.filter(col("lsn") > cut2))
-        // pipelined prep (see cdc_merge_events): on this prune-path query
-        // the blocking per-batch stats agg then runs over an
-        // already-materialized cached key plan
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        }
+        // unhinted: the prune path, the only one that writes MoR layers
+        mergeEpochs(s, t, batches, hinted = false)
         log.unpersist()
         require(t.currentSnapshot.files.exists(_.delta),
           "cdc_mor_merge: no delta layers — merge-on-read did not engage")
@@ -316,12 +292,7 @@ object CdcQueries {
         t.updateProperties(Map("write-mode" -> "mor"))
         val batches = Seq(log.filter(col("lsn") <= maxLsn / 2),
           log.filter(col("lsn") > maxLsn / 2))
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            preparedKeys = pk, preparedWinners = win)
-        }
+        mergeEpochs(s, t, batches, hinted = false)
         log.unpersist()
         require(t.currentSnapshot.files.exists(_.delta),
           "cdc_mor_narrow: no delta layers — merge-on-read did not engage")
@@ -370,23 +341,12 @@ object CdcQueries {
         val t = LakeTable.create(s, srcDir, schemaId = 3, numBuckets = 8)
         val batches = Seq(log.filter(col("lsn") <= cut),
           log.filter(col("lsn") > cut))
-        // epoch 1's table-independent scans overlap drain 1's whole
-        // streaming micro-batch (see prepareAhead)
-        val prep = prepareAhead(batches)
-        def land(i: Int, epoch: Long): Unit = {
-          val batch = batches(i)
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          val (pk, win) = handover(prep(i))
-          Merge.applyBatch(s, t, batch, epoch, batchSchemaVersion = 3,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk, preparedWinners = win)
-        }
-        land(0, 0L)
-        graft.cdc.ChangeFeed.replicateStream(s, srcDir, dstDir, ckpt)
-          .awaitTermination() // drain 1: full-snapshot bootstrap
-        land(1, 1L)
-        graft.cdc.ChangeFeed.replicateStream(s, srcDir, dstDir, ckpt)
-          .awaitTermination() // drain 2: incremental delta, same checkpoint
+        // after each epoch, drain the SAME checkpoint: drain 1 is the
+        // full-snapshot bootstrap, drain 2 the incremental delta. Epoch
+        // 1's prepared scans overlap drain 1's whole micro-batch.
+        mergeEpochs(s, t, batches, hinted = true, after = _ =>
+          graft.cdc.ChangeFeed.replicateStream(s, srcDir, dstDir, ckpt)
+            .awaitTermination())
         log.unpersist()
         LakeTable.load(s, dstDir).readUser().select(
           col("url").as("user_key"),
@@ -423,14 +383,7 @@ object CdcQueries {
           log.filter(col("lsn") <= cut1),
           log.filter(col("lsn") > cut1 && col("lsn") <= cut2),
           log.filter(col("lsn") > cut2))
-        val prep = prepareAhead(batches)
-        batches.zipWithIndex.foreach { case (batch, epoch) =>
-          val hint = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-          val (pk, win) = handover(prep(epoch))
-          Merge.applyBatch(s, t, batch, epoch.toLong, batchSchemaVersion = 3,
-            batchBytesHint = Some(hint.min(BigInt(Long.MaxValue)).toLong),
-            preparedKeys = pk, preparedWinners = win)
-        }
+        mergeEpochs(s, t, batches, hinted = true)
         log.unpersist()
         t.changesBetweenCdf(2, 3).select(
           col("url").as("user_key"),

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.core.SchemaRegistry
-import graft.lake.LakeTable
+import graft.lake.{CommitConflict, LakeTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCapability, TableCatalog, TableChange}
@@ -278,8 +278,7 @@ final case class GraftTable(dir: String, pinVersion: Option[Int] = None)
           (0 until s.numBuckets).toSet, Nil, summary)
         return true
       } catch {
-        case e: IllegalStateException
-          if String.valueOf(e.getMessage).contains("concurrent commit lost") =>
+        case e: CommitConflict =>
           attempts += 1
           if (attempts >= 5) throw new IllegalStateException(
             s"TRUNCATE $dir lost $attempts consecutive commit races " +

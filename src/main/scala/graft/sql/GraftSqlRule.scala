@@ -2,7 +2,7 @@ package graft.sql
 
 import graft.cdc.Merge
 import graft.core.SchemaRegistry
-import graft.lake.LakeTable
+import graft.lake.{CommitConflict, LakeTable}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
@@ -329,15 +329,13 @@ private[graft] object GraftWrites {
       } catch {
         // loser of a mid-merge commit race: the commit dir is abandoned
         // (gc collects it) and the merge is safely re-runnable
-        case e: IllegalStateException
-          if String.valueOf(e.getMessage).contains("concurrent commit lost") =>
-          scala.Left(e)
+        case e: CommitConflict => scala.Left(e)
       }
     // auto-allocated epochs race concurrent committers in two windows:
     // (a) the rival committed our epoch BEFORE the gate check — the gate
     // reports !applied and the statement would be SILENTLY swallowed;
-    // (b) the rival committed DURING our merge — commit() loses with
-    // "concurrent commit lost". Both re-allocate against the advanced
+    // (b) the rival committed DURING our merge — commit() loses with a
+    // CommitConflict. Both re-allocate against the advanced
     // high-water, bounded. A genuinely-empty batch (which never advances
     // the gate) is excluded. Conf-pinned epochs keep strict replay
     // semantics: a gated no-op is the correct outcome, and a commit race

@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * args: <cpus> <logDir> <nEvents> [mode] [maxChunks]; mode `replay`
   * (default) drives [[CdcStream.replayChunks]] (pipelined prefetch),
   * `tail` drives the Structured Streaming file-source tail end to end
-  * (checkpointed foreachBatch — no cross-batch prefetch, Spark owns
-  * batching). maxChunks limits the replay to a prefix of the log (the
+  * (checkpointed foreachBatch; Spark owns batching, so the next batch is
+  * prefetched speculatively from its predicted file set). maxChunks limits the replay to a prefix of the log (the
   * scaling-efficiency pairs use a shorter prefix to afford more
   * interleaved repetitions against hypervisor noise).
   */

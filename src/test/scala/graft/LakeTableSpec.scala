@@ -97,9 +97,10 @@ class LakeTableSpec extends AnyFunSuite {
     t.commitDelta(s0, 1, 3, Set(1), Seq(df(1, "winner")), Map("batch-epoch" -> "0"))
     // a racing committer that computed its delta from the SAME prev loses
     // with a clean error — after having already written its manifest files
-    intercept[IllegalStateException] {
+    val lost = intercept[IllegalStateException] {
       t.commitDelta(s0, 1, 3, Set(2), Seq(df(2, "loser")), Map("batch-epoch" -> "0"))
     }
+    assert(lost.isInstanceOf[graft.lake.CommitConflict])
     assert(t.currentVersion == 1)
     assert(t.currentSnapshot.files.map(_.path) == Seq(df(1, "winner").path))
     // the loser's unreferenced manifest is an orphan until gc
